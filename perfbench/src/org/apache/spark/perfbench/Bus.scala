@@ -1,0 +1,11 @@
+package org.apache.spark.perfbench
+
+import org.apache.spark.SparkContext
+
+/** Waits until every queued listener event has been delivered, so the
+  * benchmark's listener has seen all jobs and tasks of the calls it timed.
+  * The listener bus is Spark-internal, hence this package.
+  */
+object Bus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
