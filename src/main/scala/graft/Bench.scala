@@ -221,15 +221,14 @@ object Bench {
       Searcher.countQ(skewIdx, graft.query.PrefixQ("ident_"))
     }
     skew("skew_spill_bytes") = spillBytes.get().toDouble
-    skewIdx.postings.unpersist()
-    skewIdx.termStats.unpersist()
+    skewIdx.unpersist()
 
     // -- phase 3: driver catalog queries on the sf tables --
-    // phase isolation: drop ALL phase-2 caches — not just the Index
-    // datasets but also buildInMemory's persisted 400k-doc BuildRow set,
-    // whose old-gen residency showed up as multi-second GC noise in
-    // phase-3 timings — and size the shuffle for the catalog queries
-    // (32 cores), not for the 128-segment latency corpus
+    // phase isolation: drop ALL phase-2 caches — the latency index's
+    // images and projections too, whose old-gen residency showed up as
+    // multi-second GC noise in phase-3 timings — and size the shuffle for
+    // the catalog queries (32 cores), not for the 128-segment latency
+    // corpus
     spark.sqlContext.clearCache()
     System.gc()
     spark.conf.set("spark.sql.shuffle.partitions", cpus.toString)

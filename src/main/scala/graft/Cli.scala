@@ -39,12 +39,12 @@ object Cli {
           println(s"query [$q] -> ${hits.length} hits in ${ms.round}ms")
           hits.foreach(r => println(f"  doc=${r.getLong(0)} score=${r.getFloat(1)}%.4f"))
         case "serve" :: dir :: k :: rest if rest.size <= 1 =>
-          // long-lived reader: one repartition-by-seg up front, then every
-          // query runs the no-shuffle seg-aligned path with warm
+          // long-lived reader: per-segment term-dictionary images cached
+          // up front, then every query is one job over them with warm
           // stats/rewrite caches; queries stream from a file (one per
           // line) or stdin
           val index = IndexBuilder.open(spark, dir, serving = true)
-          index.postings.count() // materialise the aligned cache
+          index.images.foreach(_.count()) // materialise the images
           val lines = rest match {
             case file :: Nil => scala.io.Source.fromFile(file).getLines()
             case _ =>

@@ -63,6 +63,16 @@ final case class BuildRow(
   * `core/codecs/lucene90/Lucene90LiveDocsFormat.java:49`): sidecar files
   * loaded lazily EXECUTOR-side — see [[LiveDocs]]. Kernels exclude these
   * docs; `docmeta` is already tombstone-filtered by [[IndexBuilder.open]].
+  *
+  * A RESIDENT index ([[IndexBuilder.buildInMemory]], `open(serving =
+  * true)`) also holds `resident`: one persisted row per segment carrying
+  * that segment's [[SegmentImage]] (term dictionary + postings as flat
+  * arrays). Queries then seek their terms in the images instead of
+  * scanning `postings` (see `Searcher.perSegment`); `postings` and, for
+  * an in-memory build, `docmeta` and `termStats` are lazy projections of
+  * the images. Every other index (opened parquet, merge output, an Index
+  * wrapped around another's datasets) has no images and is queried by
+  * the filtered postings scan.
   */
 final class Index(
     val postings: Dataset[PostingList],
@@ -74,7 +84,8 @@ final class Index(
       * that never run a per-segment query (CheckIndex, delete, stats
       * tooling) skip the alignment probe's job entirely.
       */
-    segAlignedInit: () => Boolean = () => false
+    segAlignedInit: () => Boolean = () => false,
+    val resident: Option[Dataset[ResidentSegment]] = None
 ) extends Serializable {
 
   /** True when `postings`' PHYSICAL partitioning co-locates every row of
@@ -87,6 +98,14 @@ final class Index(
     */
   @transient lazy val segAligned: Boolean = segAlignedInit()
 
+  /** The resident images as a plain RDD (one element per segment),
+    * resolved once against the persisted relation: a query runs an RDD
+    * job over it with no Catalyst planning and reads only the `image`
+    * column. After [[unpersist]] (or `clearCache`) it recomputes from
+    * lineage.
+    */
+  @transient lazy val images: Option[org.apache.spark.rdd.RDD[SegmentImage]] =
+    resident.map(SegmentImage.images(_).rdd)
 
   /** Snapshot identity for the executor-side hot-filter cache
     * ([[graft.exec.FilterCache]]): every Index instance is an immutable
@@ -111,6 +130,29 @@ final class Index(
     */
   @transient lazy val expansionCache: java.util.Map[String, Seq[String]] =
     graft.util.Lru.map[String, Seq[String]](10000)
+
+  /** Driver-side fuzzy rewrite cache ((term, maxEdits, maxExpansions) ->
+    * rewritten disjunction), beside [[expansionCache]]: a repeated fuzzy
+    * query skips its dictionary top-N job. LRU-bounded at 10k entries.
+    */
+  @transient lazy val fuzzyCache: java.util.Map[String, graft.query.Query] =
+    graft.util.Lru.map[String, graft.query.Query](10000)
+
+  /** Release the resident images and every cache derived from them:
+    * persisted `postings` / `docmeta` / `termStats` projections (derived
+    * caches first, so none is re-planned against a dropped parent) and
+    * the driver-side stats and rewrite caches. The handle stays usable;
+    * later queries recompute from lineage.
+    */
+  def unpersist(): Unit = {
+    postings.unpersist()
+    docmeta.unpersist()
+    termStats.unpersist()
+    resident.foreach(_.unpersist())
+    termStatsCache.clear()
+    expansionCache.clear()
+    fuzzyCache.clear()
+  }
 }
 
 /** Inverted-index builder: one shuffle, one tokenize pass, per-segment
@@ -461,46 +503,50 @@ object IndexBuilder {
     metas.iterator ++ posts
   }
 
-  private def toIndex(spark: SparkSession, out: Dataset[BuildRow]): Index = {
+  /** Index over persisted resident segments: `postings` and, unless the
+    * caller supplies them, `docmeta` and `termStats` are lazy projections
+    * of the images (persist them separately if a caller scans them often).
+    */
+  private def residentIndex(spark: SparkSession, segs: Dataset[ResidentSegment],
+      docmeta0: Option[Dataset[DocMeta]] = None,
+      stats: Option[(Dataset[TermStats], FieldStats)] = None,
+      live: LiveDocs = NoDeletes): Index = {
     import spark.implicits._
-    // query-side partition count tracks the session's parallelism, not the
-    // build shuffle width: every query job schedules one task per cached
-    // partition, so 128 build partitions on 32 cores would pay 4 waves of
-    // pure task overhead per query. coalesce merges WHOLE partitions —
-    // narrow, segment co-location preserved.
-    val target = math.max(1, spark.sparkContext.defaultParallelism)
-    val outC = if (out.rdd.getNumPartitions > target) out.coalesce(target) else out
-    val postings = outC.filter(_.kind == "p")
-      .map(r => PostingList(r.seg, r.term, r.df, r.ttf, r.counts, r.baseDocIds,
-        r.maxDocIds, r.maxFreqs, r.minNorms, r.offsets, r.payload))
-    val docmeta = outC.filter(_.kind == "m")
-      .map(r => DocMeta(r.docId, r.repo, r.path, r.commit, r.lang, r.sha256, r.tokenCount, r.norm))
-    // global term stats: partial (per-seg df/ttf already aggregated) ->
-    // final; coalesced so the per-query stats collect is one task wave
-    val termStats = postings.groupBy($"term")
-      .agg(sum($"df").as("df"), sum($"ttf").as("ttf"))
-      .as[TermStats]
-      .coalesce(math.min(8, target))
-    val fs = docmeta.agg(count(lit(1)), coalesce(sum($"tokenCount".cast("long")), lit(0L)))
-      .as[(Long, Long)].head()
-    // `out` came through the groupByKey(seg) build shuffle, so each
-    // segment's rows are physically co-located -> no-shuffle query path
-    new Index(postings, docmeta, termStats, FieldStats(fs._1, fs._2),
-      segAlignedInit = () => true)
+    val postings = SegmentImage.images(segs).flatMap(_.postingLists)
+    val docmeta = docmeta0.getOrElse(segs.select(explode($"docs").as("d")).select($"d.*").as[DocMeta])
+    val (termStats, fieldStats) = stats.getOrElse {
+      // global term stats: partial (per-seg df/ttf) -> final, from
+      // `postings` so a caller that persists it aggregates three cached
+      // columns; coalesced so the per-query stats collect is one task wave
+      val ts = postings.groupBy($"term").agg(sum($"df").as("df"), sum($"ttf").as("ttf"))
+        .as[TermStats]
+        .coalesce(math.min(8, math.max(1, spark.sparkContext.defaultParallelism)))
+      val fs = docmeta.agg(count(lit(1)), coalesce(sum($"tokenCount".cast("long")), lit(0L)))
+        .as[(Long, Long)].head()
+      (ts, FieldStats(fs._1, fs._2))
+    }
+    new Index(postings, docmeta, termStats, fieldStats, live,
+      segAlignedInit = () => true, resident = Some(segs))
   }
 
-  /** Build fully in memory (cached) — test/driver-query path. */
+  /** Build fully in memory — the test/driver-query path. Each segment is
+    * inverted once and persisted as ONE resident row (its
+    * [[SegmentImage]] plus its doc-meta rows); nothing else is cached.
+    * The persisted partitions are coalesced to the session's
+    * parallelism: every query schedules one task per partition.
+    */
   def buildInMemory(spark: SparkSession, docs: Dataset[InputDoc],
       analyzerMode: String = "std",
       codec: String = graft.codec.PostingFormats.Default): Index = {
     import spark.implicits._
     val mode = analyzerMode
     val cdc = codec // capture the NAME, resolved registry-side in the task
-    val out = docs.groupByKey(_.seg)
-      .flatMapGroups((seg, it) =>
-        buildSegment(seg, it, preSorted = false, analyzerMode = mode, codec = cdc))
-      .persist()
-    toIndex(spark, out)
+    val segs = docs.groupByKey(_.seg)
+      .mapGroups((seg, it) => SegmentImage.resident(seg,
+        buildSegment(seg, it, preSorted = false, analyzerMode = mode, codec = cdc)))
+    val target = math.max(1, spark.sparkContext.defaultParallelism)
+    val segsC = if (segs.rdd.getNumPartitions > target) segs.coalesce(target) else segs
+    residentIndex(spark, segsC.persist())
   }
 
   /** Shuffle-free build: each INPUT partition becomes a segment — the
@@ -989,8 +1035,10 @@ object IndexBuilder {
     * co-located in one read partition — the build write layout
     * guarantees it unless a file got split — every query runs the
     * no-shuffle seg-aligned path with NO up-front repartition.
-    * `serving = true` additionally persists the postings (long-lived
-    * reader), repartitioning first only if the probe failed.
+    * `serving = true` makes a resident index (long-lived reader): it
+    * persists one [[SegmentImage]] per segment, repartitioning first only
+    * if the probe failed, and queries seek the images instead of
+    * scanning postings.
     */
   def open(spark: SparkSession, dir: String, serving: Boolean = false,
       snapshot: Option[Int] = None): Index = {
@@ -1008,14 +1056,7 @@ object IndexBuilder {
     // serving opens probe EAGERLY (the repartition decision needs it);
     // plain opens defer the probe to the Index's lazy segAligned, so
     // one-shot tooling (CheckIndex, stats) never pays the job
-    val served = serving
     lazy val aligned0 = segAlignmentProbe(postings0)
-    val postings =
-      if (!serving) postings0
-      else if (aligned0) postings0.persist()
-      else postings0
-        .repartition(math.max(1, spark.sparkContext.defaultParallelism), $"seg")
-        .persist()
     val docmeta0 = seg.filter($"kind" === "m")
       .select($"docId", $"repo", $"path", $"commit", $"lang", $"sha256", $"tokenCount", $"norm")
       .as[DocMeta]
@@ -1065,7 +1106,19 @@ object IndexBuilder {
           .as[(Long, Long)].head()
         (ts, FieldStats(n, sttf))
     }
-    new Index(postings, docmeta, termStats, fieldStats, live,
-      segAlignedInit = () => served || aligned0)
+    if (!serving) new Index(postings0, docmeta, termStats, fieldStats, live,
+      segAlignedInit = () => aligned0)
+    else {
+      // long-lived reader: persist one term-dictionary image per segment,
+      // built partition-locally when the read already co-locates each
+      // segment, after one repartition by seg otherwise
+      val bySeg =
+        if (aligned0) postings0
+        else postings0.repartition(math.max(1, spark.sparkContext.defaultParallelism), $"seg")
+      val segs = bySeg.mapPartitions(_.toSeq.groupBy(_.seg).iterator.map { case (s, rows) =>
+        ResidentSegment(SegmentImage.of(s, rows.iterator), Array.empty)
+      })
+      residentIndex(spark, segs.persist(), Some(docmeta), Some((termStats, fieldStats)), live)
+    }
   }
 }

@@ -80,9 +80,11 @@ object IndexFs {
       // but renamed through FileContext's raw fs, which does not move crc
       // sidecars: drop the now-orphaned tmp sidecar, and any stale
       // destination sidecar left by a fallback-branch write of an earlier
-      // version — a checksummed read against the old crc would throw
-      fs.delete(new Path(tmp.getParent, "." + tmp.getName + ".crc"), false)
-      fs.delete(new Path(p.getParent, "." + p.getName + ".crc"), false)
+      // version — a checksummed read against the old crc would throw.
+      // The write is committed by the rename, so each delete is
+      // best-effort: a failure leaves a stray sidecar, never a failed write
+      bestEffortDelete(fs, new Path(tmp.getParent, "." + tmp.getName + ".crc"))
+      bestEffortDelete(fs, new Path(p.getParent, "." + p.getName + ".crc"))
     } catch {
       case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
         fs.delete(p, false)
@@ -92,6 +94,10 @@ object IndexFs {
         }
     }
   }
+
+  private def bestEffortDelete(fs: FileSystem, p: Path): Unit =
+    try fs.delete(p, false)
+    catch { case scala.util.control.NonFatal(_) => () }
 
   def delete(path: String, recursive: Boolean = false): Boolean = {
     val p = new Path(path)

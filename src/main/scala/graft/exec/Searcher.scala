@@ -3,7 +3,7 @@ package graft.exec
 import graft.build.Index
 import graft.model._
 import graft.query._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Query planner + distributed top-k executor.
@@ -19,12 +19,19 @@ import org.apache.spark.sql.functions._
   * `orderBy(score desc, docId asc).limit(k)` (`TopDocs.merge` with the
   * HitQueue tie-break).
   *
-  * Scale: the only data movement is (a) the postings of the query's terms
-  * (partition-pruned, predicate-pushed scan on the sorted `term` column),
-  * (b) k rows per segment for the final merge (or ONE count per segment
-  * on the count path). Executor work per segment is bounded by that
-  * segment's posting sizes; WAND/block-max pruning skips non-competitive
-  * blocks without decoding them.
+  * Scale: a resident index (in-memory build, serving open) keeps one
+  * persisted term-dictionary image per segment ([[graft.build.SegmentImage]]);
+  * a query is one RDD job over those images, each task binary-searches
+  * the query's terms (and wide-pattern byte ranges) in its segments and
+  * copies out only their posting lists, and the driver merges k rows per
+  * partition (or one count per segment on the count path). Nothing a
+  * query cannot touch is read, and no Catalyst plan is built per query.
+  * Any other index (opened parquet) reads the postings of the query's
+  * terms through a partition-pruned, predicate-pushed scan on the sorted
+  * `term` column and merges with `orderBy(...).limit(k)`. Either way,
+  * executor work per segment is bounded by that segment's posting sizes;
+  * WAND/block-max pruning skips non-competitive blocks without decoding
+  * them.
   */
 object Searcher {
 
@@ -231,6 +238,16 @@ object Searcher {
     * Returns the rewritten disjunction.
     */
   def expandFuzzyBlended(index: Index, f: FuzzyQ): Query = {
+    // keyed per clause cap too: it bounds the candidate top-N
+    val key = s"${Query.MaxClauseCount}:${f.maxEdits}:${f.maxExpansions}:${f.term}"
+    val hit = index.fuzzyCache.get(key)
+    if (hit != null) return hit
+    val rewritten = rewriteFuzzy(index, f)
+    index.fuzzyCache.put(key, rewritten)
+    rewritten
+  }
+
+  private def rewriteFuzzy(index: Index, f: FuzzyQ): Query = {
     import index.postings.sparkSession.implicits._
     val ns =
       if (f.term.startsWith("@")) f.term.substring(0, f.term.indexOf(':') + 1) else ""
@@ -561,36 +578,61 @@ object Searcher {
     nsGuard && body
   }
 
-  /** Run a per-segment kernel body over the plan's terms' posting rows.
-    * `onlySeg` / `skipSeg` (-1 = unset) restrict the scan (priming pass /
-    * already-primed segment).
+  /** The ONE place that decides where a query's per-segment rows come
+    * from: runs `body(seg, term -> posting list)` once per segment that
+    * holds any of `terms` or any term a `wide` pattern's scan predicate
+    * selects. `onlySeg` / `skipSeg` (-1 = unset) restrict the segments
+    * (priming pass / already-primed segment).
     *
-    * Seg-aligned indexes (the in-memory build) run the body in ONE stage:
-    * the filtered scan is narrow over the persisted partitions and the
-    * kernels group rows by segment partition-locally — no query-time
-    * shuffle. Unaligned indexes (opened parquet) fall back to the
-    * groupByKey exchange.
+    * - Resident index ([[Index.images]]): `Left` — an RDD job over the
+    *   persisted images, one task per image partition; each task seeks
+    *   the terms in its segments' sorted dictionaries (binary search) and
+    *   copies out only those posting lists. No Catalyst plan and no scan
+    *   of the cached relation.
+    * - Any other index: `Right` — the filtered, predicate-pushed postings
+    *   scan. Seg-aligned scans group rows by segment partition-locally in
+    *   ONE stage (no query-time shuffle); unaligned ones (opened parquet)
+    *   fall back to the groupByKey exchange.
     */
   private def perSegment[T: org.apache.spark.sql.Encoder](
       index: Index, terms: Set[String],
       onlySeg: Int = -1, skipSeg: Int = -1,
       wide: Seq[WideTermSetQ] = Nil)(
-      body: (Int, Iterator[PostingList]) => Iterator[T]): org.apache.spark.sql.Dataset[T] = {
-    val spark = index.postings.sparkSession
-    import spark.implicits._
-    val basePred =
-      if (terms.isEmpty) lit(false) else $"term".isin(terms.toSeq: _*)
-    val pred = wide.foldLeft(basePred)((p, w) => p || wideScanPred(w))
-    var scan = index.postings.filter(pred)
-    if (onlySeg >= 0) scan = scan.filter($"seg" === onlySeg)
-    if (skipSeg >= 0) scan = scan.filter($"seg" =!= skipSeg)
-    val rows = scan.as[PostingList]
-    if (index.segAligned)
-      rows.mapPartitions { it =>
-        it.toSeq.groupBy(_.seg).iterator.flatMap { case (seg, rs) => body(seg, rs.iterator) }
-      }
-    else rows.groupByKey(_.seg).flatMapGroups(body)
-  }
+      body: (Int, Map[String, PostingList]) => Iterator[T])
+      : Either[org.apache.spark.rdd.RDD[T], org.apache.spark.sql.Dataset[T]] =
+    index.images match {
+      case Some(images) =>
+        implicit val ct: scala.reflect.ClassTag[T] = implicitly[org.apache.spark.sql.Encoder[T]].clsTag
+        Left(images.mapPartitions(_.flatMap { img =>
+          val wanted = (onlySeg < 0 || img.seg == onlySeg) && img.seg != skipSeg
+          val byTerm = if (wanted) img.lookup(terms, wide) else Map.empty[String, PostingList]
+          if (byTerm.isEmpty) Iterator.empty else body(img.seg, byTerm)
+        }))
+      case None =>
+        val spark = index.postings.sparkSession
+        import spark.implicits._
+        val basePred =
+          if (terms.isEmpty) lit(false) else $"term".isin(terms.toSeq: _*)
+        val pred = wide.foldLeft(basePred)((p, w) => p || wideScanPred(w))
+        var scan = index.postings.filter(pred)
+        if (onlySeg >= 0) scan = scan.filter($"seg" === onlySeg)
+        if (skipSeg >= 0) scan = scan.filter($"seg" =!= skipSeg)
+        val rows = scan.as[PostingList]
+        Right(
+          if (index.segAligned)
+            rows.mapPartitions { it =>
+              it.toSeq.groupBy(_.seg).iterator.flatMap { case (seg, rs) =>
+                body(seg, concatByTerm(rs.iterator))
+              }
+            }
+          else rows.groupByKey(_.seg).flatMapGroups((seg, rs) => body(seg, concatByTerm(rs))))
+    }
+
+  /** [[perSegment]]'s rows as a Dataset (resident RDDs are wrapped). */
+  private def rowsOf[T: org.apache.spark.sql.Encoder](index: Index,
+      fanout: Either[org.apache.spark.rdd.RDD[T], org.apache.spark.sql.Dataset[T]])
+      : org.apache.spark.sql.Dataset[T] =
+    fanout.fold(index.postings.sparkSession.createDataset(_), identity)
 
   /** A term may span multiple rows (mega-term salt split / merge output);
     * blocks are self-contained, so concat in docId order.
@@ -622,16 +664,24 @@ object Searcher {
     val q = pl.query
     val live = index.live
     val ftok = index.filterCacheToken
-    val fanout = perSegment(index, pl.terms, wide = pl.wide) { (seg, rows) =>
-      SegmentKernel.run(q, concatByTerm(rows), scorers, Int.MaxValue,
+    val fanout = perSegment(index, pl.terms, wide = pl.wide) { (seg, byTerm) =>
+      SegmentKernel.run(q, byTerm, scorers, Int.MaxValue,
           floatMode = !doubleMode, deletedOrds = live.deleted(seg), seg = seg,
           cacheToken = ftok)
         .iterator.map { case (d, s) => ScoredDocD(d, s) }
     }
-    val df = fanout.toDF()
+    val df = rowsOf(index, fanout).toDF()
     if (doubleMode) df else df.select($"docId", $"score".cast("float").as("score"))
   }
 
+  /** Global top-k as (docId, score), ordered by (score desc, docId asc).
+    * On a resident index the kernels run in ONE RDD job over the
+    * segment images, each partition emits its own top-k, and the driver
+    * merges them into a LOCAL DataFrame (no Catalyst plan, no
+    * TakeOrderedAndProject). Other indexes return the lazy
+    * `orderBy(score desc, docId asc).limit(k)` plan over the postings
+    * scan.
+    */
   def topKQ(index: Index, query0: Query, k: Int, doubleMode: Boolean = false,
       primeThreshold: Boolean = false, sim: SimilarityFactory = BM25Sim): DataFrame = {
     val spark = index.postings.sparkSession
@@ -645,6 +695,11 @@ object Searcher {
     val q = pl.query
     val live = index.live
     val ftok = index.filterCacheToken
+    def kernel(floor: Double)(seg: Int, byTerm: Map[String, PostingList]): Iterator[ScoredDocD] =
+      SegmentKernel.run(q, byTerm, scorers, kk,
+          floatMode = !doubleMode, deletedOrds = live.deleted(seg), seg = seg,
+          floor = floor, cacheToken = ftok)
+        .iterator.map { case (d, s) => ScoredDocD(d, s) }
 
     // optional cross-partition min-competitive priming (the
     // `MaxScoreAccumulator` analogue, `core/search/MaxScoreAccumulator.java`):
@@ -657,43 +712,45 @@ object Searcher {
     var primedRows: Seq[ScoredDocD] = Nil
     var primedSeg = -1
     if (primeThreshold && pl.wide.isEmpty) {
-      val bySeg = index.postings
-        .filter($"term".isin(pl.terms.toSeq: _*))
-        .groupBy($"seg").agg(sum($"df").as("c"))
-        .orderBy(desc("c")).limit(1)
-        .select($"seg").as[Int].collect()
-      if (bySeg.nonEmpty) {
-        primedSeg = bySeg.head
-        val ps = primedSeg
-        primedRows = perSegment(index, pl.terms, onlySeg = ps) { (seg, rows) =>
-          SegmentKernel.run(q, concatByTerm(rows), scorers, kk,
-              floatMode = !doubleMode, deletedOrds = live.deleted(seg), seg = seg,
-              cacheToken = ftok)
-            .iterator.map { case (d, s) => ScoredDocD(d, s) }
-        }.collect().toSeq
+      val dfBySeg = perSegment(index, pl.terms) { (seg, byTerm) =>
+        Iterator.single((seg, byTerm.valuesIterator.map(_.df.toLong).sum))
+      }.fold(_.collect(), _.collect())
+      if (dfBySeg.nonEmpty) {
+        primedSeg = dfBySeg.maxBy(_._2)._1
+        primedRows = perSegment(index, pl.terms, onlySeg = primedSeg)(kernel(floor))
+          .fold(_.collect(), _.collect()).toSeq
         if (primedRows.length >= k) floor = Math.nextDown(primedRows.map(_.score).min)
       }
     }
-    val fl = floor
-    val skipSeg = primedSeg
 
-    // 3. per-segment kernels over the pruned postings scan
-    val fanout = perSegment(index, pl.terms, skipSeg = skipSeg, wide = pl.wide) { (seg, rows) =>
-      SegmentKernel.run(q, concatByTerm(rows), scorers, kk,
-          floatMode = !doubleMode, deletedOrds = live.deleted(seg), seg = seg,
-          floor = fl, cacheToken = ftok)
-        .iterator.map { case (d, s) => ScoredDocD(d, s) }
+    // 3. per-segment kernels, 4. global reduce (partial top-k per
+    // partition, merged by (score desc, docId asc))
+    perSegment(index, pl.terms, skipSeg = primedSeg, wide = pl.wide)(kernel(floor)) match {
+      case Left(rdd) =>
+        val partial = rdd.mapPartitions(it => it.toArray.sorted(HitOrder).iterator.take(kk))
+        val top = (partial.collect() ++ primedRows).sorted(HitOrder).take(k)
+        // rows + a fixed schema: no per-query encoder derivation
+        val rows = top.map(h =>
+          if (doubleMode) Row(h.docId, h.score) else Row(h.docId, h.score.toFloat))
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+          if (doubleMode) HitSchemaD else HitSchemaF)
+      case Right(ds) =>
+        val localTopK = if (primedRows.isEmpty) ds else ds.union(spark.createDataset(primedRows))
+        val merged = localTopK.toDF().orderBy(desc("score"), asc("docId")).limit(k)
+        if (doubleMode) merged
+        else merged.select($"docId", $"score".cast("float").as("score"))
     }
-    val localTopK =
-      if (primedRows.isEmpty) fanout
-      else fanout.union(spark.createDataset(primedRows))
+  }
 
-    // 4. global reduce (partial top-k per partition via sort+limit)
-    val merged = localTopK.toDF()
-      .orderBy(desc("score"), asc("docId"))
-      .limit(k)
-    if (doubleMode) merged
-    else merged.select($"docId", $"score".cast("float").as("score"))
+  private val HitSchemaD = org.apache.spark.sql.Encoders.product[ScoredDocD].schema
+  private val HitSchemaF = org.apache.spark.sql.Encoders.product[ScoredDoc].schema
+
+  /** (score desc, docId asc) with Spark's double ordering (-0.0 == 0.0,
+    * NaN largest) — the driver-side twin of `orderBy(desc, asc)`.
+    */
+  private val HitOrder: Ordering[ScoredDocD] = (a, b) => {
+    val c = if (a.score == b.score) 0 else java.lang.Double.compare(b.score, a.score)
+    if (c != 0) c else java.lang.Long.compare(a.docId, b.docId)
   }
 
   /** BATCH top-k: many queries against one index in ONE postings scan +
@@ -738,8 +795,7 @@ object Searcher {
     // byTerm map across all queries
     val shipped: Seq[(String, Query, Scorers)] =
       planned.map { case (qid, p) => (qid, p.query, p.scorers) }
-    val fanout = perSegment(index, allTerms, wide = allWide) { (seg, rows) =>
-      val byTerm = concatByTerm(rows)
+    val fanout = perSegment(index, allTerms, wide = allWide) { (seg, byTerm) =>
       val del = live.deleted(seg)
       shipped.iterator.flatMap { case (qid, q, scorers) =>
         SegmentKernel.run(q, byTerm, scorers, kk, floatMode = fm,
@@ -748,7 +804,7 @@ object Searcher {
       }
     }
     import org.apache.spark.sql.expressions.Window
-    val ranked = fanout.toDF("qid", "docId", "score")
+    val ranked = rowsOf(index, fanout).toDF("qid", "docId", "score")
       .withColumn("rank", row_number().over(
         Window.partitionBy($"qid").orderBy(desc("score"), asc("docId"))).cast("long"))
       .filter($"rank" <= k)
@@ -807,10 +863,10 @@ object Searcher {
     val live = index.live
     val ftok = index.filterCacheToken
     val fm = !doubleMode
-    perSegment(index, pl.terms, wide = pl.wide) { (seg, rows) =>
-      SegmentKernel.collectWith(q, concatByTerm(rows), scorers,
+    rowsOf(index, perSegment(index, pl.terms, wide = pl.wide) { (seg, byTerm) =>
+      SegmentKernel.collectWith(q, byTerm, scorers,
         factory.newLeaf(seg), fm, live.deleted(seg), seg, ftok)
-    }
+    })
   }
 
   /** Count matching docs — no heap, no scoring, no global sort; the
@@ -832,13 +888,11 @@ object Searcher {
     val q = pl.query
     val live = index.live
     val ftok = index.filterCacheToken
-    perSegment(index, pl.terms, wide = pl.wide) { (seg, rows) =>
+    perSegment(index, pl.terms, wide = pl.wide) { (seg, byTerm) =>
       Iterator.single(
-        SegmentKernel.count(q, concatByTerm(rows), scorers, live.deleted(seg), seg,
-          cacheToken = ftok))
-    }
-      .agg(coalesce(sum($"value"), lit(0L)).as("n"))
-      .as[Long].head()
+        SegmentKernel.count(q, byTerm, scorers, live.deleted(seg), seg, cacheToken = ftok))
+    }.fold(_.fold(0L)(_ + _),
+      _.agg(coalesce(sum($"value"), lit(0L)).as("n")).as[Long].head())
   }
 
   /** Matching docIds (no scoring, no heap, no global score sort) — the
@@ -855,11 +909,10 @@ object Searcher {
     val q = pl.query
     val live = index.live
     val ftok = index.filterCacheToken
-    perSegment(index, pl.terms, wide = pl.wide) { (seg, rows) =>
-      SegmentKernel.docs(q, concatByTerm(rows), scorers, live.deleted(seg), seg,
-          cacheToken = ftok)
+    rowsOf(index, perSegment(index, pl.terms, wide = pl.wide) { (seg, byTerm) =>
+      SegmentKernel.docs(q, byTerm, scorers, live.deleted(seg), seg, cacheToken = ftok)
         .map(java.lang.Long.valueOf)
-    }
+    })
   }
 
   /** BATCH all-matching-docs: many queries' full match sets in ONE
@@ -891,14 +944,13 @@ object Searcher {
     val ftok = index.filterCacheToken
     val shipped: Seq[(String, Query, Scorers)] =
       planned.map { case (qid, p) => (qid, p.query, p.scorers) }
-    perSegment(index, allTerms, wide = allWide) { (seg, rows) =>
-      val byTerm = concatByTerm(rows)
+    rowsOf(index, perSegment(index, allTerms, wide = allWide) { (seg, byTerm) =>
       val del = live.deleted(seg)
       shipped.iterator.flatMap { case (qid, q, scorers) =>
         SegmentKernel.docs(q, byTerm, scorers, del, seg, cacheToken = ftok)
           .iterator.map(d => (qid, d))
       }
-    }.toDF("qid", "docId")
+    }).toDF("qid", "docId")
   }
 
   private def emptyResult(spark: SparkSession, doubleMode: Boolean): DataFrame = {

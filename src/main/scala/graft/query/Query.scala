@@ -111,8 +111,13 @@ final case class WideTermSetQ(kind: String, a: String, b: String = "",
     kind match {
       case "prefix" => term.startsWith(a)
       case "range" =>
-        (if (inc.charAt(0) == '[') term >= a else term > a) &&
-          (if (inc.charAt(1) == ']') term <= b else term < b)
+        // code-point order = UTF-8 byte order, the order of the scan's
+        // `term >= a && term <= b` and of the planner's expansions (Java's
+        // UTF-16 `compareTo` differs once a term leaves the BMP)
+        val lo = WideTermSetQ.compareCodePoints(term, a)
+        val hi = WideTermSetQ.compareCodePoints(term, b)
+        (if (inc.charAt(0) == '[') lo >= 0 else lo > 0) &&
+          (if (inc.charAt(1) == ']') hi <= 0 else hi < 0)
       case _ => pattern.matcher(term).matches()
     }
   }
@@ -122,6 +127,22 @@ final case class WideTermSetQ(kind: String, a: String, b: String = "",
       java.util.regex.Pattern.compile(graft.exec.Searcher.wildcardRegex(a))
     case "regexp" => java.util.regex.Pattern.compile(s"^(?:$a)$$")
     case _ => null
+  }
+}
+
+object WideTermSetQ {
+  /** String comparison by code point (= UTF-8 byte order). */
+  def compareCodePoints(x: String, y: String): Int = {
+    var i = 0
+    var j = 0
+    while (i < x.length && j < y.length) {
+      val cx = x.codePointAt(i)
+      val cy = y.codePointAt(j)
+      if (cx != cy) return Integer.compare(cx, cy)
+      i += Character.charCount(cx)
+      j += Character.charCount(cy)
+    }
+    Integer.compare(x.length - i, y.length - j)
   }
 }
 

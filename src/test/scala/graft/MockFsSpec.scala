@@ -114,4 +114,18 @@ class MockFsSpec extends SparkTest {
         graft.build.IndexFs.listNames(parent).toString)
     }
   }
+
+  test("writeString succeeds when a post-rename crc sidecar delete throws") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.crcfailfs.impl", classOf[graft.testfs.CrcFailFs].getName)
+    conf.set("fs.AbstractFileSystem.crcfailfs.impl", classOf[graft.testfs.CrcFailAfs].getName)
+    val base = java.nio.file.Files.createTempDirectory("graftcrcfail").toString
+    val p = s"crcfailfs:$base/manifest.json"
+    // first write renames onto a fresh path, the second over the first;
+    // both renames commit, then both sidecar deletes throw
+    graft.build.IndexFs.writeString(p, "{\"gen\":1}")
+    graft.build.IndexFs.writeString(p, "{\"gen\":2}")
+    assert(graft.build.IndexFs.readString(p) == "{\"gen\":2}")
+    assert(!graft.build.IndexFs.listNames(base).exists(_.contains(".tmp-")))
+  }
 }

@@ -4,22 +4,18 @@ import graft.build.{Datagen, IndexBuilder, InputDoc}
 import graft.exec.Searcher
 import graft.query._
 
-/** Randomized differential testing — the reference's core test strategy
-  * (`tf/util/LuceneTestCase.java:269` seeded randomness;
-  * `tf/search/CheckHits.java` brute-force oracle): generate random query
-  * trees over the fixture vocabulary and assert the engine's top-k
-  * (docIds AND float scores) equals the exhaustive oracle, across
-  * segment counts. Seed is fixed for reproducibility.
+/** The random query-tree generator of [[RandomQuerySpec]], shared with
+  * the cross-path differential ([[ResidentPathSpec]]): every query shape
+  * the planner and kernels accept, over the fixture vocabulary.
   */
-class RandomQuerySpec extends SparkTest {
-  import spark.implicits._
+object RandomQueries {
 
-  private val vocab = Datagen.Keywords ++
+  val vocab = Datagen.Keywords ++
     (0 until 40).map(i => s"ident_$i") ++
     (0 until 10).map(i => s"camelcasename$i") ++
     Seq("needle_0", "needle_1", "nonexistent_a", "nonexistent_b")
 
-  private def randomQuery(rnd: scala.util.Random, depth: Int): Query = {
+  def randomQuery(rnd: scala.util.Random, depth: Int): Query = {
     def term() = TermQ(vocab(rnd.nextInt(vocab.length)))
     def distinctTerms(n: Int): Seq[String] = {
       val out = scala.collection.mutable.LinkedHashSet.empty[String]
@@ -99,6 +95,18 @@ class RandomQuerySpec extends SparkTest {
         BoolQ(must, should, mustNot, msm, filter)
     }
   }
+}
+
+/** Randomized differential testing — the reference's core test strategy
+  * (`tf/util/LuceneTestCase.java:269` seeded randomness;
+  * `tf/search/CheckHits.java` brute-force oracle): generate random query
+  * trees over the fixture vocabulary and assert the engine's top-k
+  * (docIds AND float scores) equals the exhaustive oracle, across
+  * segment counts. Seed is fixed for reproducibility.
+  */
+class RandomQuerySpec extends SparkTest {
+  import spark.implicits._
+  import RandomQueries.randomQuery
 
   for (numSegments <- Seq(1, 3)) {
     test(s"60 random query trees == oracle ($numSegments segment(s))") {

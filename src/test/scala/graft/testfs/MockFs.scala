@@ -16,3 +16,19 @@ class MockFs extends RawLocalFileSystem {
   override def getScheme: String = "mockfs"
   override def getUri: URI = URI.create("mockfs:///")
 }
+
+/** A local-disk FileSystem under the scheme `crcfailfs` whose `delete`
+  * throws for `.crc` sidecar paths, with an AbstractFileSystem binding
+  * ([[CrcFailAfs]]) so `FileContext` renames go through it — the shape
+  * of a store whose cleanup call fails after a write has committed.
+  */
+class CrcFailFs extends RawLocalFileSystem {
+  override def getScheme: String = "crcfailfs"
+  override def getUri: URI = URI.create("crcfailfs:///")
+  override def delete(p: org.apache.hadoop.fs.Path, recursive: Boolean): Boolean =
+    if (p.getName.endsWith(".crc")) throw new java.io.IOException(s"injected delete failure: $p")
+    else super.delete(p, recursive)
+}
+
+class CrcFailAfs(uri: URI, conf: org.apache.hadoop.conf.Configuration)
+    extends org.apache.hadoop.fs.DelegateToFileSystem(uri, new CrcFailFs, conf, "crcfailfs", false)
