@@ -88,12 +88,13 @@ object Cli {
             s"seg=${m.seg} status=${m.status} docs=${m.docs} postings=${m.postings} bytes=${m.bytes}"))
           println(f"buildfrom: $total docs in $secs%.1fs (${total / secs}%.0f docs/sec)")
         case "delete" :: dir :: repo :: path :: commit :: Nil =>
-          // IndexWriter.deleteDocuments(Term) analogue: append a tombstone;
-          // readers exclude on next open, merges purge physically
+          // IndexWriter.deleteDocuments(Term) analogue: resolved now into a
+          // new delete generation; readers see it on next open, merges
+          // purge physically
           import spark.implicits._
-          IndexBuilder.deleteDocs(spark, dir,
+          val n = IndexBuilder.deleteDocs(spark, dir,
             Seq((repo, path, commit)).toDF("repo", "path", "commit"))
-          println(s"tombstoned ($repo, $path, $commit)")
+          println(s"deleted $n doc(s) matching ($repo, $path, $commit)")
         case "merge" :: dir :: Nil =>
           val ms = graft.build.IndexMerger.tieredMerge(spark, dir)
           if (ms.isEmpty) println("merge: nothing over budget")

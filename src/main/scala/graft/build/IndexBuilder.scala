@@ -59,10 +59,10 @@ final case class BuildRow(
 
 /** In-memory (or Parquet-backed) index handle.
   *
-  * `live` is the per-segment tombstone view (the liveDocs analogue,
+  * `live` is the per-segment deleted-docs view (the liveDocs analogue,
   * `core/codecs/lucene90/Lucene90LiveDocsFormat.java:49`): sidecar files
   * loaded lazily EXECUTOR-side — see [[LiveDocs]]. Kernels exclude these
-  * docs; `docmeta` is already tombstone-filtered by [[IndexBuilder.open]].
+  * docs; `docmeta` is already filtered by [[IndexBuilder.open]].
   *
   * A RESIDENT index ([[IndexBuilder.buildInMemory]], `open(serving =
   * true)`) also holds `resident`: one persisted row per segment carrying
@@ -733,24 +733,22 @@ object IndexBuilder {
 
   /** Live file set: manifests pick (gen dir, segs) pairs — write-once
     * files + manifest selection, the `segments_N` commit-point model.
-    * A seg rebuilt into a newer generation shadows its old files.
-    * `manifestRoot` defaults to the live manifest set; snapshot opens
-    * pass a commit dir (same layout) so the SAME selection logic reads a
-    * point-in-time file set.
+    * A seg rebuilt into a newer generation shadows its old files. Reads
+    * declare the known row schema, so no schema-inference job runs.
     */
-  private[build] def openRaw(spark: SparkSession, dir: String,
-      manifestRoot: String = null): DataFrame =
-    rawFor(spark, dir, listManifests(if (manifestRoot == null) dir else manifestRoot))
+  private[build] def openRaw(spark: SparkSession, dir: String): DataFrame =
+    rawFor(spark, dir, listManifests(dir))
 
-  private def rawFor(spark: SparkSession, dir: String,
+  private[build] def rawFor(spark: SparkSession, dir: String,
       manifests: Seq[SegmentManifest]): DataFrame = {
     import spark.implicits._
     val byGen = manifests.groupBy(_.dataDir)
     byGen.map { case (gen, ms) =>
-      spark.read.parquet(s"$dir/segments/$gen")
+      spark.read.schema(BuildRowSchema).parquet(s"$dir/segments/$gen")
         .filter($"seg".isin(ms.map(_.seg): _*))
     }.reduce(_ unionByName _)
   }
+  private lazy val BuildRowSchema = org.apache.spark.sql.Encoders.product[BuildRow].schema
 
   private[build] def listManifests(dir: String): Seq[SegmentManifest] = {
     IndexFs.listNames(s"$dir/manifest")
@@ -799,36 +797,38 @@ object IndexBuilder {
 
   // ---------- deletes / updates (live docs) ----------
 
-  private def tombstoneDir(dir: String) = s"$dir/tombstones"
-
   /** Delete documents by exact version key (repo, path, commit) — the
     * analogue of `IndexWriter.deleteDocuments(Term)`
-    * (`core/index/IndexWriter.java:1796`). Tombstones are append-only
-    * parquet; duplicates are harmless (set semantics), so retried batches
-    * are idempotent. Deleted docs stay in the segment files (liveDocs
-    * model, `Lucene90LiveDocsFormat.java:49`) until a merge rewrites them
-    * out; readers exclude them via [[Index.liveFilter]].
+    * (`core/index/IndexWriter.java:1796`). The delete resolves NOW: the
+    * live docs matching `keys` are recorded in a new delete generation
+    * ([[LiveDocs.commit]]), so it applies to the docs that exist when it
+    * commits, never to a version added later under the same key. A
+    * retried batch finds its docs already deleted and commits nothing.
+    * Deleted docs stay in the segment files until a merge rewrites them
+    * out. Returns the number of docs deleted.
     */
-  def deleteDocs(spark: SparkSession, dir: String, keys: DataFrame): Unit = {
-    keys.select("repo", "path", "commit")
-      .write.mode("append").parquet(tombstoneDir(dir))
+  def deleteDocs(spark: SparkSession, dir: String, keys: DataFrame): Long =
+    deleteMatching(spark, dir)(_.join(keys.select("repo", "path", "commit"),
+      Seq("repo", "path", "commit"), "left_semi"))
+
+  /** The one delete path: `pick` selects the docs to delete from the live
+    * doc-meta rows (it must keep their `docId` column).
+    */
+  private[graft] def deleteMatching(spark: SparkSession, dir: String)(
+      pick: DataFrame => DataFrame): Long = {
+    val manifests = listManifests(dir)
+    if (manifests.isEmpty) 0L
+    else {
+      val live = LiveDocs.view(dir, LiveDocs.currentGen(dir), manifests)
+      LiveDocs.commit(spark, dir, manifests, live,
+        pick(liveMeta(rawFor(spark, dir, manifests), live)).select("docId"))
+    }
   }
 
-  private[build] def readTombstones(spark: SparkSession, dir: String): Option[DataFrame] = {
-    if (!IndexFs.listNames(tombstoneDir(dir)).exists(_.endsWith(".parquet"))) None
-    else Some(spark.read.parquet(tombstoneDir(dir)).distinct())
-  }
-
-  /** Fingerprint of the on-disk tombstone file set (names + sizes) —
-    * with the live manifest set it keys the resolved livedocs sidecars:
-    * either changing forces one distributed re-resolution, otherwise
-    * opens reuse the cached sidecars with no job at all.
-    */
-  private[build] def tombstoneSetKey(dir: String): String = {
-    val files = IndexFs.list(tombstoneDir(dir))
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .map(st => s"${st.getPath.getName}:${st.getLen}").sorted
-    sha256Hex(files.mkString("|")).take(16)
+  /** The doc-meta rows of `raw` not deleted under `live` (executor-side). */
+  private[build] def liveMeta(raw: DataFrame, live: LiveDocs): DataFrame = {
+    val metas = raw.filter(col("kind") === "m")
+    if (live.isEmpty) metas else metas.filter(LiveDocs.liveRows(live))
   }
 
   // ---------- commit-point snapshots ----------
@@ -840,13 +840,13 @@ object IndexBuilder {
   // appends, deletes, and merges. A commit is stored as a COPY of the
   // live per-segment manifests under `commits/commit_<id>/manifest/`
   // (same layout as the live set, so the ordinary manifest reader reads
-  // it) plus a meta.json recording the tombstone file list at commit
-  // time and the livedocs scope key snapshot opens resolve under.
-  // Retained snapshots also pin that scope against livedocs GC and
-  // their generation dirs against [[purgeGenerations]].
+  // it) plus a meta.json recording the delete generation current at
+  // commit time. Retained snapshots also pin that delete record's
+  // sidecars against [[LiveDocs.gc]] and their generation dirs against
+  // [[purgeGenerations]].
 
   private def commitsDir(dir: String) = s"$dir/commits"
-  private def commitRoot(dir: String, id: Int) = s"${commitsDir(dir)}/commit_$id"
+  private[build] def commitRoot(dir: String, id: Int) = s"${commitsDir(dir)}/commit_$id"
 
   /** Pin the current commit point; returns the snapshot id. Ids are
     * allocated from a persisted monotonic counter (never from
@@ -866,8 +866,6 @@ object IndexBuilder {
   def commitSnapshot(dir: String): Int = {
     val manifests = listManifests(dir)
     require(manifests.nonEmpty, s"nothing to snapshot in $dir")
-    val tombs = IndexFs.list(tombstoneDir(dir))
-      .map(_.getPath.getName).filter(_.endsWith(".parquet")).sorted
     val counterPath = s"${commitsDir(dir)}/next_id"
     val persisted =
       if (IndexFs.exists(counterPath)) IndexFs.readString(counterPath).trim.toInt else 0
@@ -876,16 +874,13 @@ object IndexBuilder {
     // never reuses one
     IndexFs.writeString(counterPath, (id + 1).toString)
     val root = commitRoot(dir, id)
-    val scope = sha256Hex("snap:" + tombs.mkString("|") + ":" +
-      manifests.map(m => s"${m.seg}:${m.inputFingerprint}:${m.dataDir}")
-        .sorted.mkString("|")).take(16)
     manifests.foreach { m =>
       IndexFs.writeString(manifestPath(root, m.seg),
         IndexFs.readString(manifestPath(dir, m.seg)))
     }
     // meta last = the snapshot's commit record (readers require it)
     IndexFs.writeString(s"$root/meta.json",
-      s"""{"id":$id,"scope":"$scope","tombstones":[${tombs.map("\"" + _ + "\"").mkString(",")}]}""")
+      s"""{"id":$id,"delGen":${LiveDocs.currentGen(dir)}}""")
     id
   }
 
@@ -895,25 +890,17 @@ object IndexBuilder {
       .filter(id => IndexFs.exists(s"${commitRoot(dir, id)}/meta.json")) // half-written commits invisible
       .sorted
 
-  /** Release a pinned snapshot (its generations/scopes become
+  /** Release a pinned snapshot (its generations and sidecars become
     * purgeable; data is not deleted here — see [[purgeGenerations]]).
     */
   def releaseSnapshot(dir: String, id: Int): Boolean =
     IndexFs.delete(commitRoot(dir, id), recursive = true)
 
-  private def readSnapshotMeta(dir: String, id: Int): (String, Seq[String]) = {
-    val s = IndexFs.readString(s"${commitRoot(dir, id)}/meta.json")
-    val scope = "\"scope\"\\s*:\\s*\"([0-9a-f]+)\"".r.findFirstMatchIn(s)
-      .map(_.group(1)).getOrElse(sys.error(s"corrupt snapshot meta for $id"))
-    val tombs = "\"([^\"]+\\.parquet)\"".r.findAllMatchIn(s).map(_.group(1)).toSeq
-    (scope, tombs)
-  }
-
-  /** Livedocs scope keys pinned by retained snapshots — excluded from
-    * [[LiveDocs.gc]] regardless of age.
-    */
-  def snapshotScopes(dir: String): Set[String] =
-    listSnapshots(dir).map(id => readSnapshotMeta(dir, id)._1).toSet
+  /** The delete generation snapshot `id` pinned (-1: none). */
+  private[build] def snapshotDelGen(dir: String, id: Int): Long =
+    "\"delGen\"\\s*:\\s*(-?\\d+)".r
+      .findFirstMatchIn(IndexFs.readString(s"${commitRoot(dir, id)}/meta.json"))
+      .map(_.group(1).toLong).getOrElse(sys.error(s"corrupt snapshot meta for $id"))
 
   /** Generation dirs referenced by the live manifest set or any retained
     * snapshot — everything else is purgeable garbage.
@@ -949,41 +936,6 @@ object IndexBuilder {
         IndexFs.delete(s"$dir/segments/${st.getPath.getName}", recursive = true)
         st.getPath.getName
       }
-  }
-
-  /** Compact the tombstone set after a merge physically purged deleted
-    * docs — the reference analogue of merges clearing applied deletes
-    * (`core/index/ReadersAndUpdates.java` dropping liveDocs on merge):
-    * a tombstone row whose doc no longer EXISTS in any live segment
-    * matches nothing and only adds open-time scan cost forever. Keeps
-    * (a) rows still matching a live doc (deletes not yet merged away),
-    * written to a fresh file via tmp + rename, and (b) FILES pinned by
-    * retained snapshots (their point-in-time delete view reads those
-    * exact files). Crash-safe: survivors land before originals are
-    * removed — duplicates are harmless (tombstones are a set).
-    */
-  def compactTombstones(spark: SparkSession, dir: String): Unit = {
-    val tdir = tombstoneDir(dir)
-    val pinned: Set[String] = listSnapshots(dir)
-      .flatMap(id => readSnapshotMeta(dir, id)._2).toSet
-    val old = IndexFs.listNames(tdir).filter(_.endsWith(".parquet")).filterNot(pinned)
-    if (old.isEmpty || listManifests(dir).isEmpty) return
-    val tombs = spark.read.parquet(old.map(n => s"$tdir/$n"): _*).distinct()
-    val liveKeys = openRaw(spark, dir).filter(org.apache.spark.sql.functions.col("kind") === "m")
-      .select("repo", "path", "commit")
-    val survivors = tombs.join(liveKeys, Seq("repo", "path", "commit"), "left_semi")
-    if (!survivors.isEmpty) {
-      val tmp = s"$dir/_tombstone_compact_${java.util.UUID.randomUUID().toString.take(8)}"
-      survivors.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val fs = IndexFs.fsOf(new org.apache.hadoop.fs.Path(tdir))
-      fs.mkdirs(new org.apache.hadoop.fs.Path(tdir))
-      IndexFs.listNames(tmp).filter(_.endsWith(".parquet")).foreach { n =>
-        fs.rename(new org.apache.hadoop.fs.Path(s"$tmp/$n"),
-          new org.apache.hadoop.fs.Path(s"$tdir/compact-$n"))
-      }
-      IndexFs.delete(tmp, recursive = true)
-    }
-    old.foreach(n => IndexFs.delete(s"$tdir/$n"))
   }
 
   /** Mark generations that just lost their last live reference (called
@@ -1027,8 +979,9 @@ object IndexBuilder {
     pairs.groupBy(_._1).valuesIterator.forall(_.map(_._2).distinct.length == 1)
   }
 
-  /** Open a persistent index. `docmeta` excludes tombstoned docs;
-    * `live` carries their sidecar view for kernel-side exclusion.
+  /** Open a persistent index from metadata alone (manifests, delete
+    * record, field stats) — no Spark job. `live` applies the current delete
+    * record (a snapshot's: its pinned one); `docmeta` excludes those docs.
     *
     * Seg alignment: a plain open PROBES the read's ambient partitioning
     * (one narrow seg-column job) and, when each segment is already
@@ -1043,12 +996,13 @@ object IndexBuilder {
   def open(spark: SparkSession, dir: String, serving: Boolean = false,
       snapshot: Option[Int] = None): Index = {
     import spark.implicits._
-    val seg = snapshot match {
-      case None => openRaw(spark, dir)
+    val (manifests, delGen) = snapshot match {
+      case None => (listManifests(dir), LiveDocs.currentGen(dir))
       case Some(id) =>
         require(IndexFs.exists(s"${commitRoot(dir, id)}/meta.json"), s"no snapshot $id in $dir")
-        openRaw(spark, dir, manifestRoot = commitRoot(dir, id))
+        (listManifests(commitRoot(dir, id)), snapshotDelGen(dir, id))
     }
+    val seg = rawFor(spark, dir, manifests)
     val postings0 = seg.filter($"kind" === "p")
       .select($"seg", $"term", $"df", $"ttf", $"counts", $"baseDocIds",
         $"maxDocIds", $"maxFreqs", $"minNorms", $"offsets", $"payload")
@@ -1057,34 +1011,10 @@ object IndexBuilder {
     // plain opens defer the probe to the Index's lazy segAligned, so
     // one-shot tooling (CheckIndex, stats) never pays the job
     lazy val aligned0 = segAlignmentProbe(postings0)
-    val docmeta0 = seg.filter($"kind" === "m")
+    val live = LiveDocs.view(dir, delGen, manifests)
+    val docmeta = liveMeta(seg, live)
       .select($"docId", $"repo", $"path", $"commit", $"lang", $"sha256", $"tokenCount", $"norm")
       .as[DocMeta]
-    // delete view: live opens see the current tombstone set; snapshot
-    // opens see EXACTLY the tombstone files recorded at commit time
-    // (point-in-time contract), resolved under the snapshot's pinned
-    // scope (excluded from livedocs GC while the snapshot is retained)
-    val (scopeKey, tombsOpt) = snapshot match {
-      case None =>
-        (sha256Hex("open:" + tombstoneSetKey(dir) + ":" + manifestSetHash(dir)).take(16),
-          readTombstones(spark, dir))
-      case Some(id) =>
-        val (scope, tombNames) = readSnapshotMeta(dir, id)
-        (scope,
-          if (tombNames.isEmpty) None
-          else Some(spark.read.parquet(
-            tombNames.map(n => s"${tombstoneDir(dir)}/$n"): _*).distinct()))
-    }
-    val (docmeta, live) = tombsOpt match {
-      case None => (docmeta0, NoDeletes: LiveDocs)
-      case Some(tombs) =>
-        // executor-side delete application: tombstones resolve to
-        // per-segment sidecar files read lazily by kernels/merges —
-        // the deleted ids NEVER pass through the driver (liveDocs model)
-        val ld = LiveDocs.resolve(spark, dir, scopeKey, docmeta0.toDF(), tombs)
-        if (ld.isEmpty) (docmeta0, ld)
-        else (docmeta0.join(tombs, Seq("repo", "path", "commit"), "left_anti").as[DocMeta], ld)
-    }
     // stats: live opens read the maintained stats tables; snapshot opens
     // recompute from the pinned segment rows (same partial->final agg
     // the stats writer runs, so df/ttf sums — and therefore BM25
@@ -1095,7 +1025,8 @@ object IndexBuilder {
         def num(k: String): Long =
           ("\"" + k + "\"\\s*:\\s*(\\d+)").r.findFirstMatchIn(fsJson)
             .map(_.group(1).toLong).getOrElse(0L)
-        (spark.read.parquet(s"$dir/stats/terms").as[TermStats],
+        (spark.read.schema(org.apache.spark.sql.Encoders.product[TermStats].schema)
+          .parquet(s"$dir/stats/terms").as[TermStats],
           FieldStats(num("docCount"), num("sumTotalTermFreq")))
       case Some(_) =>
         val ts = seg.filter($"kind" === "p")

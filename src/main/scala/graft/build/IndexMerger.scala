@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * Spark restatement of `SegmentMerger.merge` (SURVEY.md §3.3,
   * `core/index/SegmentMerger.java:113-146`): docIds are remapped through
   * per-segment base offsets (the deletion-aware `MergeState.DocMap`
-  * analogue — order preserving, so posting arrays stay sorted; tombstoned
+  * analogue — order preserving, so posting arrays stay sorted; deleted
   * docs are dropped, like the reference's merges purging deletes), then
   * posting rows are range-partitioned by term and merged streamingly
   * within each partition — Spark's sort-merge shuffle IS the reference's
@@ -173,7 +173,7 @@ object IndexMerger {
     }
 
   /** forceMerge(1)-style compaction: one logical segment (seg = 0) with
-    * contiguous docIds 0..N-1 in (old seg, old ord) order; tombstoned
+    * contiguous docIds 0..N-1 in (old seg, old ord) order; deleted
     * docs are dropped (deletes applied, like `IndexWriter.forceMerge`).
     */
   def forceMerge(
@@ -184,7 +184,7 @@ object IndexMerger {
   ): Index = {
     import spark.implicits._
 
-    // kept-doc counts per old segment (docmeta is already tombstone-filtered)
+    // kept-doc counts per old segment (docmeta already excludes deletes)
     // — integer shift (not SQL division, which promotes to double and loses
     // precision for docIds >= 2^53), must match segOf exactly
     val perSeg = index.docmeta
@@ -243,7 +243,7 @@ object IndexMerger {
   /** Merge a group of persistent segments into ONE new segment in a new
     * generation; old manifests are removed, the new manifest points at
     * the new generation (write-once files + manifest selection — the
-    * `segments_N` commit-point model). Tombstoned docs are dropped.
+    * `segments_N` commit-point model). Deleted docs are dropped.
     *
     * Safe only for segments whose build (streaming batch) is complete —
     * merging a segment that a retried batch may still rebuild would
@@ -261,25 +261,11 @@ object IndexMerger {
     val manifests = IndexBuilder.listManifests(dir).filter(m => segs.contains(m.seg))
     require(manifests.map(_.seg).toSet == segs.toSet, s"missing manifests for $segs")
 
-    val raw = manifests.groupBy(_.dataDir).map { case (gen, ms) =>
-      spark.read.parquet(s"$dir/segments/$gen").filter($"seg".isin(ms.map(_.seg): _*))
-    }.reduce(_ unionByName _)
-
-    val metas0 = raw.filter($"kind" === "m")
-    val tombs = IndexBuilder.readTombstones(spark, dir)
-    val (metas, deleted) = tombs match {
-      case None => (metas0, NoDeletes: LiveDocs)
-      case Some(t) =>
-        // executor-side delete application, scoped to this merge group:
-        // sidecars are written by a distributed job and read lazily by
-        // the merge tasks — no driver collect of deleted ids
-        val scope = IndexBuilder.sha256Hex("merge:" +
-          IndexBuilder.tombstoneSetKey(dir) + ":" +
-          manifests.map(m => s"${m.seg}:${m.inputFingerprint}:${m.dataDir}")
-            .sorted.mkString("|")).take(16)
-        val del = LiveDocs.resolve(spark, dir, scope, metas0, t)
-        (metas0.join(t, Seq("repo", "path", "commit"), "left_anti"), del)
-    }
+    val raw = IndexBuilder.rawFor(spark, dir, manifests)
+    // deletes were resolved when written: the group's current sidecars
+    // are read lazily by the merge tasks — no driver collect of ids
+    val deleted = LiveDocs.view(dir, LiveDocs.currentGen(dir), manifests)
+    val metas = IndexBuilder.liveMeta(raw, deleted)
 
     val newSeg = MergedSegBase + math.max(-1,
       IndexBuilder.listManifests(dir).map(_.seg - MergedSegBase).filter(_ >= 0)
@@ -328,23 +314,14 @@ object IndexMerger {
     // manifest last on failure paths; here: delete olds, then refresh stats
     segs.foreach { s => IndexFs.delete(IndexBuilder.manifestPath(dir, s)) }
     IndexBuilder.writeStats(spark, dir)
-    // merges are the livedocs compaction point: the manifest-set change
-    // invalidates every cached sidecar scope for NEW opens, and the next
-    // open re-resolves only the still-live tombstones — without gc,
-    // historical scopes accumulate one full delete-set copy per tombstone
-    // batch. Deletion is GRACE-WINDOWED (see LiveDocs.gc): a reader opened
-    // before the merge keeps its point-in-time sidecars for the lease
-    // period, the same role the reference's IndexDeletionPolicy plays for
-    // liveDocs files still referenced by an open commit point. Scopes
-    // pinned by retained snapshots are never deleted.
-    LiveDocs.gc(dir, retain = IndexBuilder.snapshotScopes(dir))
+    // the merged-away segments' delete entries stop applying: their
+    // sidecars become garbage once the reader lease passes (see
+    // LiveDocs.gc); snapshot-pinned ones survive
+    LiveDocs.gc(dir)
     // generations this merge just dereferenced get their _deref marker;
     // IndexBuilder.purgeGenerations deletes them after the reader lease
     // (never while a retained snapshot references them)
     IndexBuilder.markDereferencedGens(dir)
-    // drop tombstones the merge just made pointless (their docs no longer
-    // exist in any live segment); snapshot-pinned tombstone files survive
-    IndexBuilder.compactTombstones(spark, dir)
     man
   }
 
@@ -411,6 +388,17 @@ object CheckIndex {
       .select($"term").as[String].take(20)
       .map(t => s"term=$t: global stats != sum of segment stats")
 
-    postingViolations ++ statViolations
+    // delete generations: every applying entry's sidecar, checked
+    // executor-side against the record
+    val liveViolations = index.live match {
+      case f: FileLiveDocs =>
+        val root = f.ldDir
+        spark.sparkContext.parallelize(f.entries.values.toSeq,
+          math.min(f.entries.size, spark.sparkContext.defaultParallelism))
+          .flatMap(e => LiveDocs.checkSidecar(root, e)).take(20).toSeq
+      case _ => Nil
+    }
+
+    postingViolations ++ statViolations ++ liveViolations
   }
 }

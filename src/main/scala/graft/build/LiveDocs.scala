@@ -1,7 +1,7 @@
 package graft.build
 
-import graft.model.DocMeta
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.model.SegmentManifest
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Per-segment deleted-docId view — the liveDocs analogue
@@ -9,14 +9,12 @@ import org.apache.spark.sql.functions._
   * file per segment, read SEGMENT-SIDE by each leaf reader, never
   * collected anywhere central).
   *
-  * The engine's restatement: deletions resolve to one sorted docId
-  * sidecar file per affected segment (written executor-side by a
-  * distributed job, see [[LiveDocs.resolve]]); kernels and merges load
-  * ONLY their own segment's sidecar, lazily, executor-side. The driver
-  * ships the tiny (seg -> count) manifest with the closure — never the
-  * ids. At 10^9+ deletes the driver holds nothing; each executor holds
-  * at most the deletes of the segments it is processing, the same bound
-  * the reference's per-leaf liveDocs bitsets give.
+  * Deletes are resolved when they are WRITTEN (see [[LiveDocs.commit]]):
+  * each segment with deletes has one sorted docId sidecar file, named by
+  * the delete record of the commit that last changed it. Kernels and
+  * merges load ONLY their own segment's sidecar, lazily, executor-side;
+  * the driver ships the tiny (seg -> entry) map with the closure — never
+  * the ids.
   */
 sealed trait LiveDocs extends Serializable {
   /** Sorted deleted docIds of `seg`, or null when the segment has none.
@@ -42,12 +40,24 @@ final case class MapLiveDocs(m: Map[Int, Array[Long]]) extends LiveDocs {
   def deletedCount: Long = m.valuesIterator.map(_.length.toLong).sum
 }
 
-/** Sidecar-file-backed view: `segs` maps each segment WITH deletes to
-  * its delete count (the manifest — tiny, closure-shipped); the sorted
-  * docId arrays live in `ldDir/seg_<s>.longs` and are loaded lazily,
-  * once per JVM per segment, by whoever calls [[deleted]] (executors).
+/** One segment's entry in a delete record (`SegmentCommitInfo`
+  * delGen/delCount): sidecar path under `livedocs/`, deleted and total doc
+  * counts, and the segment identity the ids were resolved against. It
+  * applies only to that exact identity: a resumed rebuild reuses the seg
+  * id with new ordinals.
   */
-final class FileLiveDocs(val ldDir: String, val segs: Map[Int, Long]) extends LiveDocs {
+final case class DelEntry(seg: Int, sidecar: String, count: Long, docs: Long,
+    dataDir: String, inputFingerprint: String) {
+  def appliesTo(m: SegmentManifest): Boolean =
+    m.seg == seg && m.dataDir == dataDir && m.inputFingerprint == inputFingerprint
+}
+
+/** Sidecar-file-backed view: `entries` maps each segment WITH deletes to
+  * its entry (tiny, closure-shipped); the sorted docId arrays live in
+  * `ldDir/<entry.sidecar>` and are loaded lazily, once per JVM per
+  * sidecar, by whoever calls [[deleted]] (executors).
+  */
+final class FileLiveDocs(val ldDir: String, val entries: Map[Int, DelEntry]) extends LiveDocs {
 
   /** Sidecar loads performed through THIS instance (driver instance in
     * tests: must stay 0 — tasks deserialize their own copy, so executor
@@ -56,15 +66,15 @@ final class FileLiveDocs(val ldDir: String, val segs: Map[Int, Long]) extends Li
   @transient private lazy val loads = new java.util.concurrent.atomic.AtomicInteger(0)
   def loadedSegs: Int = loads.get()
 
-  def deleted(seg: Int): Array[Long] =
-    if (!segs.contains(seg)) null
-    else {
+  def deleted(seg: Int): Array[Long] = entries.get(seg) match {
+    case None => null
+    case Some(e) =>
       // JVM-GLOBAL cache (FileLiveDocs.cache): task closures deserialize
       // their own instance per query, so an instance-level cache would
       // re-read the sidecar once per task per query — the global map
-      // keyed by (scope dir, seg) gives the once-per-executor-JVM bound
-      // (scope dirs are write-once, so entries never go stale)
-      val key = s"$ldDir/seg_$seg.longs"
+      // keyed by sidecar path gives the once-per-executor-JVM bound
+      // (sidecars are write-once, so entries never go stale)
+      val key = s"$ldDir/${e.sidecar}"
       val hit = FileLiveDocs.cache.get(key)
       if (hit != null) hit
       else {
@@ -74,16 +84,24 @@ final class FileLiveDocs(val ldDir: String, val segs: Map[Int, Long]) extends Li
         FileLiveDocs.cache.putIfAbsent(key, arr)
         arr
       }
-    }
+  }
 
-  def isEmpty: Boolean = segs.isEmpty
-  def deletedCount: Long = segs.valuesIterator.sum
+  def isEmpty: Boolean = entries.isEmpty
+  def deletedCount: Long = entries.valuesIterator.map(_.count).sum
 }
 
 object FileLiveDocs {
   private val cache = new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
 }
 
+/** Delete generations. Layout under `dir/livedocs/`:
+  *  - `del_G.json` — the delete record committed by delete generation G:
+  *    one [[DelEntry]] per segment that has deletes. The highest G is the
+  *    current record; snapshots pin theirs by number.
+  *  - `gen_G/seg_S.longs` — the write-once sidecars delete G wrote: the
+  *    union of S's previous sidecar and G's newly deleted ids, sorted.
+  *    Segments G did not touch keep pointing at older generations' files.
+  */
 object LiveDocs {
 
   /** Sidecar IO goes through the Hadoop FileSystem API (like Spark's own
@@ -93,6 +111,9 @@ object LiveDocs {
     */
   private def fsOf(path: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.FileSystem =
     path.getFileSystem(new org.apache.hadoop.conf.Configuration())
+
+  private def root(dir: String) = s"$dir/livedocs"
+  private def recordPath(dir: String, g: Long) = s"${root(dir)}/del_$g.json"
 
   private[build] def readSidecar(path: String): Array[Long] = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -108,11 +129,10 @@ object LiveDocs {
 
   private def writeSidecar(path: String, ids: Array[Long], n: Int): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
-    // ATTEMPT-UNIQUE tmp name: task retries/speculation (and two sessions
-    // racing on the same unresolved scope) must never interleave writes
-    // into one tmp file. Attempts compute identical content from the same
-    // deterministic partition, so whichever complete file wins the final
-    // rename is correct.
+    // ATTEMPT-UNIQUE tmp name: task retries/speculation must never
+    // interleave writes into one tmp file. Attempts compute identical
+    // content from the same deterministic partition, so whichever
+    // complete file wins the final rename is correct.
     val attempt = Option(org.apache.spark.TaskContext.get())
       .map(_.taskAttemptId().toString)
       .getOrElse(java.util.UUID.randomUUID().toString)
@@ -132,11 +152,98 @@ object LiveDocs {
     }
   }
 
-  /** Reader lease for resolved sidecar scopes: [[gc]] only deletes scopes
-    * older than this, so an open snapshot (whose kernels read sidecars
+  /** Committed delete generations (record numbers), ascending. */
+  private def recordGens(dir: String): Seq[Long] =
+    IndexFs.listNames(root(dir))
+      .collect { case n if n.startsWith("del_") && n.endsWith(".json") =>
+        n.stripPrefix("del_").stripSuffix(".json").toLong }
+      .sorted
+
+  /** The current delete generation, -1 when nothing was ever deleted. */
+  def currentGen(dir: String): Long = recordGens(dir).lastOption.getOrElse(-1L)
+
+  private def readRecord(dir: String, g: Long): Seq[DelEntry] =
+    if (g < 0) Nil
+    else "\\{[^{}]*\\}".r.findAllIn(IndexFs.readString(recordPath(dir, g))).toSeq.map { o =>
+      def f(k: String): String = ("\"" + k + "\"\\s*:\\s*\"?([^\",}]*)\"?").r
+        .findFirstMatchIn(o).map(_.group(1))
+        .getOrElse(sys.error(s"corrupt delete record $g in $dir: no $k"))
+      DelEntry(f("seg").toInt, f("sidecar"), f("count").toLong, f("docs").toLong,
+        f("dataDir"), f("inputFingerprint"))
+    }
+
+  /** Record `g`'s entries that apply to `manifests` (one small file read). */
+  def view(dir: String, g: Long, manifests: Seq[SegmentManifest]): LiveDocs = {
+    val applying = readRecord(dir, g).filter(e => manifests.exists(e.appliesTo))
+    if (applying.isEmpty) NoDeletes
+    else new FileLiveDocs(root(dir), applying.map(e => e.seg -> e).toMap)
+  }
+
+  /** Executor-side live filter over rows carrying a `docId` column. */
+  def liveRows(live: LiveDocs): Column = {
+    val isLive = udf { (id: Long) =>
+      val arr = live.deleted(IndexBuilder.segOf(id))
+      arr == null || java.util.Arrays.binarySearch(arr, id) < 0
+    }
+    isLive(col("docId"))
+  }
+
+  /** Commit one delete generation G (the writer applying deletes into
+    * per-segment `.liv` files). `ids` are live docIds under view `cur` of
+    * `manifests`. One distributed job groups them by segment and merges
+    * each group with its segment's current sidecar into a new sorted
+    * sidecar under `gen_G/`; the driver gets one (seg, count) row per
+    * touched segment and commits `del_G.json` last. Still-applying entries
+    * of untouched segments carry over. Nothing matched -> no record.
+    * Returns the number of newly deleted docs.
+    */
+  private[build] def commit(spark: SparkSession, dir: String, manifests: Seq[SegmentManifest],
+      cur: LiveDocs, ids: DataFrame): Long = {
+    import spark.implicits._
+    val prev: Map[Int, DelEntry] = cur match {
+      case f: FileLiveDocs => f.entries
+      case _ => Map.empty
+    }
+    // write-once: above every record AND every sidecar dir (an aborted
+    // commit may have left sidecars without a record)
+    val g = (currentGen(dir) +: IndexFs.listNames(root(dir)).collect {
+      case n if n.startsWith("gen_") => n.stripPrefix("gen_").toLong }).max + 1
+    val ldRoot = root(dir)
+    val prevFiles = prev.map { case (s, e) => s -> s"$ldRoot/${e.sidecar}" }
+    val counts: Map[Int, Long] = ids
+      .select($"docId", shiftright($"docId", IndexBuilder.SegShift).cast("int").as("seg"))
+      .as[(Long, Int)]
+      .groupByKey(_._2)
+      .mapGroups { (seg, rows) =>
+        // one segment at a time: its previous sidecar + its new ids,
+        // sorted and de-duplicated
+        val all = prevFiles.get(seg).map(readSidecar).getOrElse(Array.emptyLongArray) ++ rows.map(_._1)
+        java.util.Arrays.sort(all)
+        var m = 0
+        all.foreach { v => if (m == 0 || all(m - 1) != v) { all(m) = v; m += 1 } }
+        writeSidecar(s"$ldRoot/gen_$g/seg_$seg.longs", all, m)
+        (seg, m.toLong)
+      }
+      .collect().toMap
+    if (counts.isEmpty) return 0L
+    val bySeg = manifests.map(m => m.seg -> m).toMap
+    val entries = prev ++ counts.map { case (s, c) =>
+      val m = bySeg(s)
+      s -> DelEntry(s, s"gen_$g/seg_$s.longs", c, m.docs, m.dataDir, m.inputFingerprint)
+    }
+    val json = entries.values.toSeq.sortBy(_.seg).map(e =>
+      s"""{"seg":${e.seg},"sidecar":"${e.sidecar}","count":${e.count},"docs":${e.docs},""" +
+        s""""dataDir":"${e.dataDir}","inputFingerprint":"${e.inputFingerprint}"}""")
+    IndexFs.writeString(recordPath(dir, g), json.mkString(s"""{"gen":$g,"entries":[""", ",", "]}"))
+    gc(dir)
+    counts.map { case (s, c) => c - prev.get(s).map(_.count).getOrElse(0L) }.sum
+  }
+
+  /** Reader lease: [[gc]] deletes a sidecar only once it has been
+    * unreferenced for this long, so a reader (whose kernels load sidecars
     * lazily, executor-side) keeps its point-in-time delete view across a
-    * concurrent merge for at least the lease period — the role the
-    * reference's `IndexDeletionPolicy` plays for liveDocs files still
+    * concurrent delete or merge for at least the lease period — the role
+    * the reference's `IndexDeletionPolicy` plays for liveDocs files still
     * referenced by an open commit (`core/index/IndexDeletionPolicy.java:38`).
     * Readers that outlive the lease must re-open (fail-fast
     * FileNotFoundException, never a silent wrong answer). Tunable via
@@ -145,92 +252,63 @@ object LiveDocs {
   def gcGraceMs: Long =
     sys.props.get("graft.livedocs.gcGraceMs").map(_.toLong).getOrElse(15L * 60 * 1000)
 
-  /** Drop resolved sidecar scopes older than the grace window — called by
-    * merges (the natural compaction point: merged segments purge their
-    * deletes and the manifest-set change invalidates every old scope for
-    * new opens). The next open re-resolves only what the remaining
-    * tombstones still cover, so livedocs storage stays bounded by the
-    * LIVE delete set plus at most one lease window of history, instead of
-    * growing with every historical tombstone batch.
+  /** Drop delete state nothing applies any more. A sidecar is kept while an
+    * APPLYING entry references it, in the current record (live segments)
+    * or a retained snapshot's record (that snapshot's segments). Any other
+    * sidecar gets a `.deref` marker on first sight and is deleted once the
+    * marker is older than `graceMs` (mark-then-purge, like segment
+    * generations); superseded records go once their successor is. Runs
+    * after every delete commit and every merge.
     */
-  def gc(dir: String, graceMs: Long = gcGraceMs,
-      retain: Set[String] = Set.empty): Unit = {
-    val root = new org.apache.hadoop.fs.Path(s"$dir/livedocs")
-    val fs = fsOf(root)
-    if (!fs.exists(root)) return
-    val cutoff = System.currentTimeMillis() - graceMs
-    fs.listStatus(root).foreach { st =>
-      // `retain` = scope keys pinned by retained snapshots
-      // (IndexBuilder.snapshotScopes) — never deleted, regardless of age
-      if (st.getModificationTime < cutoff && !retain.contains(st.getPath.getName))
-        fs.delete(st.getPath, true)
+  def gc(dir: String, graceMs: Long = gcGraceMs): Unit = {
+    val ld = IndexFs.list(root(dir))
+    if (ld.isEmpty) return
+    val now = System.currentTimeMillis()
+    val cutoff = now - graceMs
+    val gens = recordGens(dir)
+    val cur = gens.lastOption.getOrElse(-1L)
+    val pinned = IndexBuilder.listSnapshots(dir).map(id =>
+      IndexBuilder.snapshotDelGen(dir, id) -> IndexBuilder.listManifests(IndexBuilder.commitRoot(dir, id)))
+    val keep: Set[String] = ((cur -> IndexBuilder.listManifests(dir)) +: pinned).flatMap { case (g, ms) =>
+      readRecord(dir, g).filter(e => ms.exists(e.appliesTo)).map(_.sidecar)
+    }.toSet
+    val mtime = ld.map(st => st.getPath.getName -> st.getModificationTime).toMap
+    gens.zip(gens.drop(1)).foreach { case (g, next) =>
+      if (!pinned.exists(_._1 == g) && mtime(s"del_$next.json") <= cutoff)
+        IndexFs.delete(recordPath(dir, g))
+    }
+    ld.map(_.getPath.getName).filter(_.startsWith("gen_")).foreach { gd =>
+      val gdir = s"${root(dir)}/$gd"
+      val files = IndexFs.list(gdir).map(st => st.getPath.getName -> st.getModificationTime).toMap
+      val left = files.keys.filter(_.endsWith(".longs")).filterNot { n =>
+        !keep(s"$gd/$n") && {
+          val mk = n.stripSuffix(".longs") + ".deref"
+          val markedAt = files.getOrElse(mk, { IndexFs.writeString(s"$gdir/$mk", now.toString); now })
+          markedAt <= cutoff && { IndexFs.delete(s"$gdir/$n"); IndexFs.delete(s"$gdir/$mk"); true }
+        }
+      }
+      if (left.isEmpty) IndexFs.delete(gdir, recursive = true)
     }
   }
 
-  /** Resolve the current tombstone set against `docmeta` into per-segment
-    * sidecar files under `dir/livedocs/<scopeKey>/`, DISTRIBUTED: the
-    * semi-join and the sidecar writes run executor-side (each reducer
-    * owns whole segments via the `seg` repartition and writes their
-    * sorted files directly to shared storage); the driver receives one
-    * (seg, count) row per segment with deletes — the manifest — and
-    * commits it last (write-once + manifest selection, like segment
-    * generations). Re-resolution happens only when `scopeKey` changes
-    * (tombstone set or live segment set changed); otherwise the cached
-    * manifest is read back with NO job at all.
+  /** CheckIndex over one applying entry: its sidecar exists and holds
+    * exactly `count` ids, strictly ascending, inside the segment's ordinal
+    * range. Reads the file itself, never the reader cache.
     */
-  def resolve(spark: SparkSession, dir: String, scopeKey: String,
-      docmeta: DataFrame, tombs: DataFrame): LiveDocs = {
-    import spark.implicits._
-    val ldDir = s"$dir/livedocs/$scopeKey"
-    val manifestP = new org.apache.hadoop.fs.Path(s"$ldDir/_manifest.json")
-    val mfs = fsOf(manifestP)
-    if (!mfs.exists(manifestP)) {
-      mfs.mkdirs(new org.apache.hadoop.fs.Path(ldDir))
-      val out = ldDir
-      val counts: Seq[(Int, Long)] = docmeta
-        .join(tombs, Seq("repo", "path", "commit"), "left_semi")
-        .select($"docId",
-          shiftright($"docId", IndexBuilder.SegShift).cast("int").as("seg"))
-        .repartition(col("seg"))
-        .sortWithinPartitions($"seg", $"docId")
-        .as[(Long, Int)]
-        .mapPartitions { it =>
-          // rows arrive grouped by seg, docId-ascending; buffer ONE
-          // segment at a time (bounded by that segment's delete count)
-          val res = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
-          var curSeg = Int.MinValue
-          var buf = new Array[Long](1024)
-          var n = 0
-          def flush(): Unit = if (n > 0) {
-            writeSidecar(s"$out/seg_$curSeg.longs", buf, n)
-            res += ((curSeg, n.toLong))
-            n = 0
-          }
-          it.foreach { case (id, seg) =>
-            if (seg != curSeg) { flush(); curSeg = seg }
-            if (n == buf.length) buf = java.util.Arrays.copyOf(buf, n * 2)
-            buf(n) = id
-            n += 1
-          }
-          flush()
-          res.iterator
-        }
-        .collect().toSeq
-      val json = counts.sortBy(_._1)
-        .map { case (s, c) => s""""$s":$c""" }.mkString("{", ",", "}")
-      val mo = mfs.create(manifestP, true)
-      try mo.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally mo.close()
+  private[build] def checkSidecar(ldDir: String, e: DelEntry): Seq[String] = {
+    val at = s"seg=${e.seg} sidecar=${e.sidecar}"
+    val p = new org.apache.hadoop.fs.Path(s"$ldDir/${e.sidecar}")
+    scala.util.Try((fsOf(p).getFileStatus(p).getLen, readSidecar(p.toString))) match {
+      case scala.util.Failure(ex) => Seq(s"$at: unreadable sidecar: $ex")
+      case scala.util.Success((len, ids)) =>
+        val lo = e.seg.toLong << IndexBuilder.SegShift
+        Seq(
+          (ids.length != e.count || len != 4L + 8L * e.count) ->
+            s"$at: ${ids.length} ids in $len bytes, record says ${e.count}",
+          ids.indices.drop(1).exists(i => ids(i) <= ids(i - 1)) -> s"$at: ids not strictly ascending",
+          ids.exists(id => id < lo || id >= lo + e.docs) ->
+            s"$at: id outside the segment's ${e.docs} ordinals")
+          .collect { case (true, msg) => msg }
     }
-    val manifestJson = {
-      val in = mfs.open(manifestP)
-      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    }
-    val segs: Map[Int, Long] =
-      "\"(-?\\d+)\"\\s*:\\s*(\\d+)".r
-        .findAllMatchIn(manifestJson)
-        .map(m => m.group(1).toInt -> m.group(2).toLong).toMap
-    if (segs.isEmpty) NoDeletes else new FileLiveDocs(ldDir, segs)
   }
 }

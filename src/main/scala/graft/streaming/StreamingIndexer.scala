@@ -25,9 +25,12 @@ import org.apache.spark.sql.streaming.Trigger
   * once per index in `stream_meta.json`.
   *
   * Updates (`IndexWriter.updateDocument`, `core/index/IndexWriter.java:1844`
-  * — atomic delete-by-term + add): incoming (repo, path) keys tombstone
-  * every existing version with a DIFFERENT commit before the new rows are
-  * indexed. Tombstone appends are idempotent, so retries stay safe.
+  * — atomic delete-by-term + add): before the new rows are indexed, every
+  * live version of an incoming (repo, path) key with a DIFFERENT commit
+  * is deleted, resolved at once into a delete generation
+  * (`IndexBuilder.deleteDocs` semantics): it never hides a version added
+  * later, so an update may revert a key to an earlier commit. A retried
+  * batch finds its stale versions already deleted and commits nothing.
   */
 object StreamingIndexer {
 
@@ -57,7 +60,7 @@ object StreamingIndexer {
     * stop (AvailableNow). Call again as new files arrive; the stream
     * checkpoint + deterministic segment ids + manifest resume give
     * exactly-once per input file. With `update = true`, existing versions
-    * of incoming (repo, path) keys are tombstoned first.
+    * of incoming (repo, path) keys are deleted first.
     */
   def runAvailableNow(
       spark: SparkSession,
@@ -76,15 +79,11 @@ object StreamingIndexer {
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, batchId: Long) =>
         val batchBase = base + (batchId * segsPerBatch).toInt
         if (update && graft.build.IndexFs.exists(s"$indexDir/manifest")) {
-          // updateDocument semantics: tombstone every indexed version of
-          // the incoming keys whose commit differs from the new one
-          val existing = IndexBuilder.open(spark, indexDir).docmeta
-            .select($"repo", $"path", $"commit")
+          // updateDocument semantics: delete every live version of the
+          // incoming keys whose commit differs from the new one
           val incoming = df.select($"repo", $"path", $"commit".as("newCommit")).distinct()
-          val stale = existing.join(incoming, Seq("repo", "path"))
-            .filter($"commit" =!= $"newCommit")
-            .select($"repo", $"path", $"commit")
-          if (!stale.isEmpty) IndexBuilder.deleteDocs(spark, indexDir, stale)
+          IndexBuilder.deleteMatching(spark, indexDir)(
+            _.join(incoming, Seq("repo", "path")).filter($"commit" =!= $"newCommit"))
         }
         val docs = df.as[SourceRow].map { r =>
           val key = s"${r.repo}/${r.path}@${r.commit}"

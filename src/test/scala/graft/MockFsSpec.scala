@@ -5,7 +5,7 @@ import graft.exec.Searcher
 import org.apache.spark.sql.functions._
 
 /** Storage portability: every index IO path (manifests, generations,
-  * stats, tombstones, livedocs sidecars, streaming meta) must go through
+  * stats, delete records, livedocs sidecars, streaming meta) must go through
   * the Hadoop FileSystem API, never `java.io.File` — on an HDFS or
   * object-store index dir a `java.io.File` listing silently reports
   * "missing", which would make deletes no-op (deleted docs resurrect)
@@ -37,20 +37,20 @@ class MockFsSpec extends SparkTest {
     assert(graft.build.IndexFs.listNames(s"$dir/segments").sorted == gensBefore,
       "resume re-ran complete segments on a non-file: scheme")
 
-    // deletes: tombstone discovery + sidecar resolution on mockfs
+    // deletes: delete-record discovery + sidecar writes on mockfs
     val victims = Searcher.matchingDocs(idx0, graft.query.TermQ("needle_0")).toDF("docId")
       .join(idx0.docmeta, "docId").select($"repo", $"path", $"commit")
     IndexBuilder.deleteDocs(spark, dir, victims)
     val idx1 = IndexBuilder.open(spark, dir)
     assert(idx1.live.deletedCount == nVictims,
-      "tombstones invisible on a non-file: scheme (java.io.File fallback?)")
+      "deletes invisible on a non-file: scheme (java.io.File fallback?)")
     assert(Searcher.count(idx1, "needle_0") == 0, "deleted docs resurrected")
     assert(idx1.docmeta.count() == 400 - nVictims)
 
     // merge compacts on mockfs: old manifests deleted, deletes purged
     IndexMerger.tieredMerge(spark, dir, segsPerTier = 4)
     val idx2 = IndexBuilder.open(spark, dir)
-    assert(idx2.live.isEmpty, "merge must purge tombstoned docs")
+    assert(idx2.live.isEmpty, "merge must purge deleted docs")
     assert(Searcher.count(idx2, "needle_0") == 0)
     assert(idx2.docmeta.count() == 400 - nVictims)
     assert(CheckIndex.run(idx2).isEmpty)
@@ -76,26 +76,38 @@ class MockFsSpec extends SparkTest {
     graft.streaming.StreamingIndexer.runAvailableNow(spark, inputDir, dir,
       segsPerBatch = 2, update = true)
     val idx1 = IndexBuilder.open(spark, dir)
-    assert(idx1.docmeta.count() == 120, "update must tombstone every stale version")
+    assert(idx1.docmeta.count() == 120, "update must delete every stale version")
     assert(idx1.docmeta.filter(!$"commit".endsWith("_v2")).count() == 0)
   }
 
-  test("livedocs gc is grace-windowed: fresh scopes survive a merge-time gc, stale scopes do not") {
+  test("livedocs gc is grace-windowed over delete generations") {
     val local = java.nio.file.Files.createTempDirectory("graftgc").toString
-    def mkScope(name: String): java.io.File = {
-      val d = new java.io.File(s"$local/livedocs/$name")
-      d.mkdirs()
-      java.nio.file.Files.writeString(d.toPath.resolve("seg_0.longs"), "x")
-      d
-    }
-    val stale = mkScope("stale")
-    val fresh = mkScope("fresh")
+    val dir = "mockfs:" + local + "/idx"
+    IndexBuilder.buildPersistent(spark, Datagen.toInputDocs(Datagen.corpus(spark, 200, seed = 33L), 2), dir)
+    def delete(mod: Int): Long = IndexBuilder.deleteDocs(spark, dir,
+      IndexBuilder.open(spark, dir).docmeta.filter($"docId" % 5 === mod)
+        .select($"repo", $"path", $"commit"))
+    def files(g: Int) = graft.build.IndexFs.listNames(s"$dir/livedocs/gen_$g").toSet
+    val n0 = delete(0)
+    // generation 1 supersedes both of generation 0's sidecars; the
+    // commit-time gc only marks them (default grace = 15 min)
+    val n1 = delete(1)
+    assert(n0 > 0 && n1 > 0)
+    assert(files(0) == Set("seg_0.longs", "seg_1.longs", "seg_0.deref", "seg_1.deref"), files(0))
+    assert(files(1) == Set("seg_0.longs", "seg_1.longs"), files(1))
+    // a sidecar dereferenced longer ago than the lease goes; a fresh one stays
+    val stale = new java.io.File(s"$local/idx/livedocs/gen_0/seg_0.deref")
     assert(stale.setLastModified(System.currentTimeMillis() - 60L * 60 * 1000))
-    LiveDocs.gc(local) // default grace (15 min)
-    assert(!stale.exists(), "stale scope must be gc'd")
-    assert(fresh.exists(), "scope younger than the reader lease must survive")
-    LiveDocs.gc(local, graceMs = 0)
-    assert(!fresh.exists(), "grace 0 compacts everything")
+    LiveDocs.gc(dir)
+    assert(files(0) == Set("seg_1.longs", "seg_1.deref"), files(0))
+    // grace 0 drops every unreferenced sidecar and the superseded record;
+    // the current generation's sidecars (still applying) survive
+    LiveDocs.gc(dir, graceMs = 0)
+    assert(files(0).isEmpty && files(1) == Set("seg_0.longs", "seg_1.longs"))
+    assert(graft.build.IndexFs.listNames(s"$dir/livedocs").filter(_.startsWith("del_")) ==
+      Seq("del_1.json"))
+    val idx = IndexBuilder.open(spark, dir)
+    assert(idx.live.deletedCount == n0 + n1 && idx.docmeta.count() == 200 - n0 - n1)
   }
 
   test("writeString atomically replaces an existing file on file: and mockfs: schemes") {

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * reader model (`core/index/SnapshotDeletionPolicy.java:43`): a pinned
   * snapshot must open with EXACTLY the docs, deletes, stats, and
   * therefore BM25 scores it had at commit time, across later deletes
-  * and merges; retained snapshots protect their livedocs scopes and
+  * and merges; retained snapshots protect their delete sidecars and
   * generation dirs from GC/purge; released snapshots become purgeable.
   */
 class SnapshotSpec extends SparkTest {
@@ -36,19 +36,19 @@ class SnapshotSpec extends SparkTest {
     IndexBuilder.deleteDocs(spark, dir, victims)
     val nVictims = victims.count()
     assert(nVictims > 0)
-    val idx1 = IndexBuilder.open(spark, dir) // resolves livedocs scope for commit-1 state
+    val idx1 = IndexBuilder.open(spark, dir)
     val r1 = shaped(idx1)
     val snap1 = IndexBuilder.commitSnapshot(dir)
     assert(snap1 == 1)
 
     // merge ALL segments: the original generation loses its last live
     // reference (only the snapshots still pin it), deletes purge
-    // physically, livedocs gc'd (grace 0 EXCEPT pinned scopes)
+    // physically, livedocs gc'd (grace 0 EXCEPT pinned sidecars)
     def liveSegs() = IndexFs.listNames(s"$dir/manifest")
       .filter(n => n.startsWith("seg_") && n.endsWith(".json"))
       .map(_.stripPrefix("seg_").stripSuffix(".json").toInt)
     IndexMerger.mergeSegments(spark, dir, liveSegs())
-    graft.build.LiveDocs.gc(dir, graceMs = 0, retain = IndexBuilder.snapshotScopes(dir))
+    graft.build.LiveDocs.gc(dir, graceMs = 0)
     val idxLive = IndexBuilder.open(spark, dir)
     assert(idxLive.docmeta.count() == n0 - nVictims)
 
@@ -60,7 +60,7 @@ class SnapshotSpec extends SparkTest {
     assert(CheckIndex.run(s0).isEmpty)
 
     // snapshot 1: deletes of commit 1 applied, scores identical to then —
-    // even though the live manifest set and livedocs scopes moved on
+    // even though the live manifest set and delete sidecars moved on
     val s1 = IndexBuilder.open(spark, dir, snapshot = Some(1))
     assert(s1.docmeta.count() == n0 - nVictims)
     assert(Searcher.count(s1, "needle_0") == 0)
@@ -88,49 +88,54 @@ class SnapshotSpec extends SparkTest {
     }
   }
 
-  test("merge compacts dead tombstones; snapshot-pinned tombstone files survive") {
+  test("merge drops dead sidecars; snapshot-pinned ones survive gc") {
     val dir = java.nio.file.Files.createTempDirectory("grafttcomp").toString
-    def tombFiles() = IndexFs.listNames(s"$dir/tombstones").filter(_.endsWith(".parquet"))
+    def sidecars() = IndexFs.listNames(s"$dir/livedocs").filter(_.startsWith("gen_"))
+      .flatMap(g => IndexFs.listNames(s"$dir/livedocs/$g").filter(_.endsWith(".longs")).map(s"$g/" + _))
+      .toSet
     def segsOf() = IndexFs.listNames(s"$dir/manifest")
       .filter(n => n.startsWith("seg_") && n.endsWith(".json"))
       .map(_.stripPrefix("seg_").stripSuffix(".json").toInt)
     val src = Datagen.corpus(spark, 400, seed = 63L)
     IndexBuilder.buildPersistent(spark, Datagen.toInputDocs(src, 6), dir)
 
-    // delete + full merge with NO snapshots: every tombstone's doc is
-    // purged from the live set, so the whole tombstone set compacts away
+    // delete + full merge with NO snapshots: every deleted doc is purged
+    // from the live set, so no applying entry references a sidecar any
+    // more; past the reader lease (grace 0) gc deletes them all
     val idx0 = IndexBuilder.open(spark, dir)
     val v1 = Searcher.matchingDocs(idx0, graft.query.TermQ("needle_0")).toDF("docId")
       .join(idx0.docmeta, "docId").select($"repo", $"path", $"commit")
     assert(v1.count() > 0)
     IndexBuilder.deleteDocs(spark, dir, v1)
-    assert(tombFiles().nonEmpty)
+    assert(sidecars().nonEmpty)
     IndexMerger.mergeSegments(spark, dir, segsOf())
-    assert(tombFiles().isEmpty, "fully-applied tombstones must compact away at merge")
     val live1 = IndexBuilder.open(spark, dir)
     assert(live1.live.isEmpty && Searcher.count(live1, "needle_0") == 0)
+    assert(sidecars().nonEmpty, "dead sidecars outlive the merge within the reader lease")
+    graft.build.LiveDocs.gc(dir, graceMs = 0)
+    assert(sidecars().isEmpty, "dead sidecars must go once the lease has passed")
 
-    // delete more, PIN a snapshot (its delete view = these files), merge:
-    // the pinned files survive compaction and the snapshot still applies
+    // delete more, PIN a snapshot (its delete view = these sidecars),
+    // merge: the pinned sidecars survive gc and the snapshot still applies
     // its point-in-time deletes; the live set purged them physically
     val nLive1 = live1.docmeta.count()
     val v2 = live1.docmeta.orderBy($"docId").limit(40).select($"repo", $"path", $"commit")
-    IndexBuilder.deleteDocs(spark, dir, v2)
-    IndexBuilder.open(spark, dir) // resolve pre-merge livedocs state
+    assert(IndexBuilder.deleteDocs(spark, dir, v2) == 40)
     val id = IndexBuilder.commitSnapshot(dir)
-    val pinnedFiles = tombFiles().toSet
+    val pinned = sidecars()
+    assert(pinned.nonEmpty)
     IndexMerger.mergeSegments(spark, dir, segsOf())
-    assert(tombFiles().toSet == pinnedFiles,
-      "snapshot-pinned tombstone files must survive compaction")
+    graft.build.LiveDocs.gc(dir, graceMs = 0)
+    assert(sidecars() == pinned, "snapshot-pinned sidecars must survive gc")
     val snap = IndexBuilder.open(spark, dir, snapshot = Some(id))
     assert(snap.docmeta.count() == nLive1 - 40, "snapshot deletes must still apply")
     assert(snap.live.deletedCount == 40)
     val live2 = IndexBuilder.open(spark, dir)
     assert(live2.live.isEmpty && live2.docmeta.count() == nLive1 - 40)
-    // release the pin: the next merge cycle can drop the dead files too
+    // release the pin: the next gc drops the dead sidecars too
     IndexBuilder.releaseSnapshot(dir, id)
-    IndexBuilder.compactTombstones(spark, dir)
-    assert(tombFiles().isEmpty, "released tombstone files compact away")
+    graft.build.LiveDocs.gc(dir, graceMs = 0)
+    assert(sidecars().isEmpty, "released sidecars must go")
   }
 
   test("snapshot works on a non-file: scheme index dir") {

@@ -56,4 +56,22 @@ class StreamingSpec extends SparkTest {
     assert(Searcher.count(i3, "streamneedle") == 200)
     assert(graft.build.CheckIndex.run(i3).isEmpty)
   }
+
+  test("an update reverting a key to an older commit keeps it live") {
+    val in = java.nio.file.Files.createTempDirectory("graftrevert-in").toString
+    val idx = java.nio.file.Files.createTempDirectory("graftrevert-idx").toString
+    // three rounds for one key: c1, then c2, then c1 again — each round's
+    // delete applies to the versions that existed when it committed, so
+    // round 2's delete of (r, a.scala, c1) must not hide round 3's re-add
+    Seq("c1", "c2", "c1").foreach { c =>
+      Seq(graft.model.SourceRow("r", "a.scala", c, "scala", s"object A revneedle $c"))
+        .toDS().write.mode("append").parquet(in)
+      StreamingIndexer.runAvailableNow(spark, in, idx, segsPerBatch = 1, update = true)
+    }
+    val i = IndexBuilder.open(spark, idx)
+    val live = i.docmeta.select($"docId", $"commit").as[(Long, String)].collect().toSeq
+    assert(live.map(_._2) == Seq("c1"), s"live versions: $live")
+    assert(Searcher.topK(i, "revneedle", 10).as[(Long, Float)].collect().map(_._1).toSeq ==
+      live.map(_._1))
+  }
 }
